@@ -15,6 +15,7 @@ with --diff-base), --run-dir (checkpoint ledger for resume).
 from __future__ import annotations
 
 import argparse
+import logging
 import sys
 
 
@@ -37,6 +38,7 @@ def main(argv=None):
     ap.add_argument("--run-dir", default=None, help="checkpoint ledger dir (resume)")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
+    logging.basicConfig(level=logging.INFO, format="%(name)s: %(message)s")
 
     from codegraph import materialize, pipeline
     from codegraph.session import get_spark
@@ -58,25 +60,16 @@ def main(argv=None):
                   ingest_commits=not args.no_commits)
     if args.run_dir:
         res = materialize.run_checkpointed(spark, args.run_dir, source, **kwargs)
-        nodes, edges = res["nodes"], res["edges"]
-        files = None
     else:
         res = pipeline.run_pipeline(spark, source, **kwargs)
-        nodes, edges, files = res["nodes"], res["edges"], res["files"]
-
-    nodes.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{args.output}/nodes")
-    edges.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{args.output}/edges")
-    if files is not None:
-        files.write.mode("overwrite").parquet(f"{args.output}/files")
+    materialize.write_graph(res["nodes"], res["edges"], res["files"],
+                            args.output)
     if diff is not None:
         # F4: mark deleted files + cascade to their declared symbols
         marked = pipeline.mark_deleted(
             spark.read.parquet(f"{args.output}/nodes"),
             spark.read.parquet(f"{args.output}/edges"), diff)
-        marked.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{args.output}/nodes_marked")
+        materialize.write_table(marked, f"{args.output}/nodes_marked")
     print(f"nodes={spark.read.parquet(f'{args.output}/nodes').count()} "
           f"edges={spark.read.parquet(f'{args.output}/edges').count()}")
     return 0

@@ -156,11 +156,6 @@ class Emitter:
         for col in _FILEMETA_REST:
             c[col].append(None)
 
-    def to_pandas(self):
-        import pandas as pd
-
-        return pd.DataFrame(self._cols, columns=EXTRACT_COLUMNS)
-
     def to_arrow(self):
         """Arrow record batch straight from the column lists — no pandas
         object-array hop on the return side of the Python boundary (the

@@ -328,7 +328,7 @@ _A_OK_SQL = ("_best IS NOT NULL AND NOT ("
 
 
 def resolve_mentions(records: DataFrame, symbols: DataFrame,
-                     salt: int = 0, persist: bool = False) -> DataFrame:
+                     salt: int = 0) -> DataFrame:
     """mention records -> resolved candidate edges (repo, src_key, rel_type,
     dst_key). Duplicate mentions produce duplicate candidate edges; MERGE
     semantics make edge multiplicity irrelevant (§1.4.4) and ``link_edges``
@@ -345,11 +345,11 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
     columns instead of the old explode + dictionary join + ranked min_by
     round-trip.
 
-    The persisted frames (``persist`` is ignored by design, as before):
-    the single mention scan and the grouped dictionaries, each feeding
-    2-6 downstream joins. All are either dictionary-scale or a projection
-    of the mention columns; MEMORY_AND_DISK spills rather than OOMs, and
-    the caller releases via ``spark.catalog.clearCache()``.
+    The persisted frames: the single mention scan and the grouped
+    dictionaries, each feeding 2-6 downstream joins. All are either
+    dictionary-scale or a projection of the mention columns;
+    MEMORY_AND_DISK spills rather than OOMs, and the caller releases via
+    ``spark.catalog.clearCache()``.
     """
     def _p(df: DataFrame) -> DataFrame:
         return df.persist()

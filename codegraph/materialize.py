@@ -4,8 +4,13 @@ The reference flushes count-based micro-batches and is re-runnable because
 every write is a MERGE (Q3/Q4, SolutionProcessor.cs:178-189). The Spark
 equivalent: stage outputs land as parquet checkpoints with a driver-side
 ledger; a killed run restarts at the last completed stage/bucket. Node/edge
-tables are partitioned by repo-hash bucket so a 1000-executor cluster writes
-them without a global shuffle and downstream consumers can prune by bucket.
+tables are partitioned by repo-hash bucket so downstream consumers can prune
+by bucket. Every bucket-partitioned write goes through ``write_table``, which
+pays ONE shuffle by bucket before ``partitionBy``: without it every upstream
+task opens its own writer per bucket it holds (the 8-repo ``index_fleet``
+benchmark graph came out as 624 files of ~5 KB for 3.3 MB), and the final
+write stages spend most of their time opening and closing parquet files
+instead of encoding rows.
 """
 
 from __future__ import annotations
@@ -47,19 +52,55 @@ class Ledger:
                                 "ts": time.time(), **extra}) + "\n")
 
 
+def _aqe_on(spark: SparkSession) -> bool:
+    return spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true"
+
+
+def write_shape(spark: SparkSession) -> str:
+    """The clustering ``write_table`` applies to a bucketed table under the
+    session's current planner (named in the gate log line)."""
+    return "rebalance(bucket)" if _aqe_on(spark) else "repartition(bucket)"
+
+
+def cluster_for_write(df: DataFrame, bucketed: bool = True) -> DataFrame:
+    """Cluster ``df`` so each output partition is written by one task.
+
+    Classic planner (``_gate_aqe`` turns AQE off below its byte gate):
+    ``repartition("bucket")`` sends every bucket to exactly one task, so a
+    bucket directory holds one file; an unbucketed table gets one writer.
+    AQE on (at scale): the ``rebalance`` hint, so AQE sizes the writer tasks
+    from runtime bytes and splits a hot bucket instead of funnelling it
+    through one task. Spark drops the ``rebalance`` hint when AQE is off,
+    which is why the two planners need different calls. Row sets never
+    change — only which task writes which rows."""
+    if _aqe_on(df.sparkSession):
+        return df.hint("rebalance", "bucket") if bucketed else df.hint("rebalance")
+    return df.repartition("bucket") if bucketed else df.repartition(1)
+
+
+def write_table(df: DataFrame, path: str, bucketed: bool = True) -> None:
+    """The one writer for graph tables: ``bucketed`` tables are partitioned
+    by repo-hash ``bucket`` (one file per bucket below the AQE gate)."""
+    writer = cluster_for_write(df, bucketed).write.mode("overwrite")
+    if bucketed:
+        writer = writer.partitionBy("bucket")
+    writer.parquet(path)
+
+
 def checkpoint_stage(spark: SparkSession, ledger: Ledger, stage: str,
-                     build, partition_by: str | None = None) -> DataFrame:
+                     build, bucketed: bool = False) -> DataFrame:
     """Run ``build()`` -> DataFrame and persist it as a parquet checkpoint,
-    unless the ledger already has it (resume path: read back, skip compute)."""
+    unless the ledger already has it (resume path: read back, skip compute).
+    ``bucketed`` stages are graph tables and go through ``write_table``."""
     out = ledger.stage_dir(stage)
     if ledger.is_done(stage):
         return spark.read.parquet(out)
     ledger.mark(stage, "start")
     df = build()
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(out)
+    if bucketed:
+        write_table(df, out)
+    else:
+        df.write.mode("overwrite").parquet(out)
     ledger.mark(stage, "done", path=out)
     return spark.read.parquet(out)
 
@@ -82,11 +123,9 @@ def write_graph(nodes: DataFrame, edges: DataFrame, files: DataFrame,
             return (df.withColumn("updated_at", ts)
                     .withColumn("code_to_neo4j", F.lit(True)))
         nodes, edges, files = _stamped(nodes), _stamped(edges), _stamped(files)
-    nodes.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_dir, "nodes"))
-    edges.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_dir, "edges"))
-    files.write.mode("overwrite").parquet(os.path.join(out_dir, "files"))
+    write_table(nodes, os.path.join(out_dir, "nodes"))
+    write_table(edges, os.path.join(out_dir, "edges"))
+    write_table(files, os.path.join(out_dir, "files"), bucketed=False)
 
 
 def lineage_metrics(source: DataFrame, records: DataFrame) -> DataFrame:
@@ -114,8 +153,10 @@ def run_checkpointed(spark: SparkSession, run_dir: str, source: DataFrame,
                      pkg_metadata: DataFrame | None = None,
                      **pipeline_kwargs) -> dict[str, DataFrame]:
     """Checkpoint-resumable pipeline driver: extraction, linking, and the
-    final tables each land as a ledger-tracked parquet stage. A killed run
-    re-invoked with the same run_dir resumes at the first incomplete stage."""
+    node/edge tables each land as a ledger-tracked parquet stage. A killed run
+    re-invoked with the same run_dir resumes at the first incomplete stage.
+    ``files`` is returned lazily: it is rebuilt from the checkpointed
+    extraction records."""
     from codegraph import canon, link
     from codegraph import pipeline as P
 
@@ -144,13 +185,13 @@ def run_checkpointed(spark: SparkSession, run_dir: str, source: DataFrame,
                          assembly_refs=assembly_refs, pkg_metadata=pkg_metadata,
                          persist=False, records=records, **pipeline_kwargs)
     nodes = checkpoint_stage(spark, ledger, "nodes", lambda: res["nodes"],
-                             partition_by="bucket")
+                             bucketed=True)
     edges = checkpoint_stage(spark, ledger, "edges", lambda: res["edges"],
-                             partition_by="bucket")
+                             bucketed=True)
     metrics = checkpoint_stage(spark, ledger, "metrics",
                                lambda: lineage_metrics(filtered, records))
-    return {"nodes": nodes, "edges": edges, "records": records,
-            "linked": linked, "metrics": metrics}
+    return {"nodes": nodes, "edges": edges, "files": res["files"],
+            "records": records, "linked": linked, "metrics": metrics}
 
 
 def _extract_stage(filtered: DataFrame, pkg_metadata: DataFrame | None,

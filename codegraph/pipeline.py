@@ -18,20 +18,22 @@ all identity is (repo, key).
 
 from __future__ import annotations
 
+import logging
 import os
 import re
-import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from codegraph import canon, gitmeta, link
+from codegraph import canon, gitmeta, link, materialize
 from codegraph import schema as S
 from codegraph.extract import extract_records
 from codegraph.extract.dispatch import (attach_ts_projects, collect_pkg_meta,
                                         pkg_dim_over_cap, pkg_urls_via_join,
                                         scan_ts_configs, scan_ts_projects)
 from codegraph.schema import ACC_ORDER
+
+log = logging.getLogger("codegraph")
 
 # ---------------------------------------------------------------------------
 # discovery (S3/F1/F2)
@@ -183,8 +185,7 @@ def _gate_aqe(spark, source: DataFrame) -> None:
         # many-file input is real scale; don't spend driver listing time —
         # keep AQE on and take the shuffle-hash dictionary path
         spark.conf.set("codegraph.dict_broadcast", "false")
-        print(f"codegraph: gate: {len(inputs)} input files (>256) -> "
-              "AQE on, dict joins shuffle_hash", file=sys.stderr)
+        _log_gate(spark, f"{len(inputs)} input files (>256)")
         return
     sc = spark.sparkContext
     jvm = sc._jvm
@@ -200,9 +201,18 @@ def _gate_aqe(spark, source: DataFrame) -> None:
     if small:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("codegraph.dict_broadcast", "true" if small else "false")
-    print(f"codegraph: gate: {total} input bytes -> "
-          f"AQE {'off' if small else 'session default'}, dict joins "
-          f"{'broadcast' if small else 'shuffle_hash'}", file=sys.stderr)
+    _log_gate(spark, f"{total} input bytes")
+
+
+def _log_gate(spark, measured: str) -> None:
+    """One line per run naming what the gate left in force: the planner,
+    the dictionary-join strategy and the graph write shape."""
+    aqe = materialize._aqe_on(spark)
+    bc = spark.conf.get("codegraph.dict_broadcast", "false") == "true"
+    log.info("gate: %s -> planner %s, dict joins %s, graph writes %s",
+             measured, "AQE" if aqe else "classic",
+             "broadcast" if bc else "shuffle_hash",
+             materialize.write_shape(spark))
 
 
 def purge(spark, graph_dir: str, repo: str) -> None:
@@ -242,10 +252,7 @@ def purge(spark, graph_dir: str, repo: str) -> None:
             continue
         kept = df.filter(F.col("repo") != repo)
         tmp = path + "__purging"
-        writer = kept.write.mode("overwrite")
-        if "bucket" in kept.columns:
-            writer = writer.partitionBy("bucket")
-        writer.parquet(tmp)
+        materialize.write_table(kept, tmp, bucketed="bucket" in kept.columns)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(path, old)
         os.rename(tmp, path)
@@ -423,8 +430,7 @@ def run_pipeline(
     # --- entity linking (J1/F9) --------------------------------------------
     rels = records.filter(F.col("rec") == "rel").select(
         "repo", "src_key", "dst_key", "rel_type")
-    resolved = link.resolve_mentions(records, symbols, salt=salt,
-                                     persist=persist)
+    resolved = link.resolve_mentions(records, symbols, salt=salt)
     candidate_edges = rels.unionByName(
         resolved.select("repo", "src_key", "dst_key", "rel_type"))
     linked = link.link_edges(candidate_edges, symbols)

@@ -41,6 +41,8 @@ def test_mark_deleted_cascades(spark, tiny_result):
 
 
 def test_purge_removes_only_target_repo(spark, tiny_result, tmp_path):
+    import os
+
     from codegraph.pipeline import purge
 
     out = str(tmp_path / "graph")
@@ -53,6 +55,14 @@ def test_purge_removes_only_target_repo(spark, tiny_result, tmp_path):
     assert kept.filter("repo = 'repo0001'").count() > 0
     live_edges = spark.read.parquet(f"{out}/edges")
     assert live_edges.filter("repo = 'repo0000'").count() == 0
+    # the rewrite goes through the bucket writer: one file per bucket
+    for table in ("nodes", "edges"):
+        buckets = [d for d in os.listdir(f"{out}/{table}")
+                   if d.startswith("bucket=")]
+        assert buckets
+        for d in buckets:
+            files = os.listdir(f"{out}/{table}/{d}")
+            assert sum(f.endswith(".parquet") for f in files) == 1, (table, d)
 
 
 def test_purge_recovers_dangling_old(spark, tiny_result, tmp_path):
