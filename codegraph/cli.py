@@ -38,7 +38,14 @@ def main(argv=None):
     ap.add_argument("--run-dir", default=None, help="checkpoint ledger dir (resume)")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
-    logging.basicConfig(level=logging.INFO, format="%(name)s: %(message)s")
+    # the codegraph logger only: the root level stays at WARNING, so py4j
+    # and pyspark keep their INFO lines to themselves
+    log = logging.getLogger("codegraph")
+    if not log.handlers:
+        handler = logging.StreamHandler(sys.stderr)
+        handler.setFormatter(logging.Formatter("%(name)s: %(message)s"))
+        log.addHandler(handler)
+    log.setLevel(logging.INFO)
 
     from codegraph import materialize, pipeline
     from codegraph.session import get_spark

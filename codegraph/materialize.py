@@ -52,35 +52,56 @@ class Ledger:
                                 "ts": time.time(), **extra}) + "\n")
 
 
-def _aqe_on(spark: SparkSession) -> bool:
+def aqe_on(spark: SparkSession) -> bool:
     return spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true"
 
 
-def write_shape(spark: SparkSession) -> str:
-    """The clustering ``write_table`` applies to a bucketed table under the
-    session's current planner (named in the gate log line)."""
-    return "rebalance(bucket)" if _aqe_on(spark) else "repartition(bucket)"
+# measured source bytes per classic-planner writer task. The generated fleet
+# corpus's graph is ~10x its source parquet bytes (62 KB -> 631 KB), so one
+# writer gets at most ~80 MB of graph parquet
+WRITER_TARGET_BYTES = 8 * 1024 ** 2
+
+
+def writers_per_bucket(spark: SparkSession) -> int:
+    """Classic-planner tasks that share one bucket: one per
+    ``WRITER_TARGET_BYTES`` of the source input ``_gate_aqe`` measured, at
+    most one per shuffle partition. Any one bucket may hold the whole input
+    (a single repo, or one hot repo), so the count is sized from the total,
+    not from an even spread over buckets: a few-repo input keeps its writer
+    parallelism, and an input under 8 MiB (or one the gate did not size)
+    gets one writer and one file per bucket."""
+    measured = int(spark.conf.get("codegraph.input_bytes", "0"))
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(parts, -(-measured // WRITER_TARGET_BYTES)))
 
 
 def cluster_for_write(df: DataFrame, bucketed: bool = True) -> DataFrame:
-    """Cluster ``df`` so each output partition is written by one task.
+    """Cluster ``df`` so each output partition is written by few tasks.
 
     Classic planner (``_gate_aqe`` turns AQE off below its byte gate):
-    ``repartition("bucket")`` sends every bucket to exactly one task, so a
-    bucket directory holds one file; an unbucketed table gets one writer.
-    AQE on (at scale): the ``rebalance`` hint, so AQE sizes the writer tasks
-    from runtime bytes and splits a hot bucket instead of funnelling it
-    through one task. Spark drops the ``rebalance`` hint when AQE is off,
-    which is why the two planners need different calls. Row sets never
-    change — only which task writes which rows."""
-    if _aqe_on(df.sparkSession):
+    ``repartition`` by ``bucket`` and a row-hash sub-key with
+    ``writers_per_bucket`` values, so a bucket is written by that many tasks
+    at most — one task and one file for a small input; an unbucketed table
+    gets one writer. AQE on (at scale): the ``rebalance`` hint, so AQE sizes
+    the writer tasks from runtime bytes and splits a hot bucket. Spark drops
+    the ``rebalance`` hint when AQE is off, which is why the two planners
+    need different calls. Row sets never change — only which task writes
+    which rows."""
+    spark = df.sparkSession
+    if aqe_on(spark):
         return df.hint("rebalance", "bucket") if bucketed else df.hint("rebalance")
-    return df.repartition("bucket") if bucketed else df.repartition(1)
+    if not bucketed:
+        return df.repartition(1)
+    k = writers_per_bucket(spark)
+    if k == 1:
+        return df.repartition("bucket")
+    # a hash of the whole row, so a retried task writes the same rows
+    return df.repartition("bucket", F.pmod(F.xxhash64(*df.columns), F.lit(k)))
 
 
 def write_table(df: DataFrame, path: str, bucketed: bool = True) -> None:
     """The one writer for graph tables: ``bucketed`` tables are partitioned
-    by repo-hash ``bucket`` (one file per bucket below the AQE gate)."""
+    by repo-hash ``bucket`` (one file per bucket for a small input)."""
     writer = cluster_for_write(df, bucketed).write.mode("overwrite")
     if bucketed:
         writer = writer.partitionBy("bucket")
@@ -153,10 +174,9 @@ def run_checkpointed(spark: SparkSession, run_dir: str, source: DataFrame,
                      pkg_metadata: DataFrame | None = None,
                      **pipeline_kwargs) -> dict[str, DataFrame]:
     """Checkpoint-resumable pipeline driver: extraction, linking, and the
-    node/edge tables each land as a ledger-tracked parquet stage. A killed run
-    re-invoked with the same run_dir resumes at the first incomplete stage.
-    ``files`` is returned lazily: it is rebuilt from the checkpointed
-    extraction records."""
+    node/edge/files tables each land as a ledger-tracked parquet stage. A
+    killed run re-invoked with the same run_dir resumes at the first
+    incomplete stage."""
     from codegraph import canon, link
     from codegraph import pipeline as P
 
@@ -188,9 +208,10 @@ def run_checkpointed(spark: SparkSession, run_dir: str, source: DataFrame,
                              bucketed=True)
     edges = checkpoint_stage(spark, ledger, "edges", lambda: res["edges"],
                              bucketed=True)
+    files = checkpoint_stage(spark, ledger, "files", lambda: res["files"])
     metrics = checkpoint_stage(spark, ledger, "metrics",
                                lambda: lineage_metrics(filtered, records))
-    return {"nodes": nodes, "edges": edges, "files": res["files"],
+    return {"nodes": nodes, "edges": edges, "files": files,
             "records": records, "linked": linked, "metrics": metrics}
 
 

@@ -174,7 +174,13 @@ def _gate_aqe(spark, source: DataFrame) -> None:
     i.e. real scale — the dictionaries scale with the corpus, must not
     concentrate on the driver, and every dictionary join falls back to the
     shuffle_hash path. Each decision is logged once per run so a bench
-    artifact can always state which planner/join strategy ran."""
+    artifact can state which planner/join strategy ran: an INFO line on the
+    ``codegraph`` logger, which the CLI sends to stderr and a library caller
+    configures itself.
+
+    The measured byte total is kept as ``codegraph.input_bytes``, from which
+    ``materialize.writers_per_bucket`` sizes the classic-planner writers."""
+    spark.conf.unset("codegraph.input_bytes")
     if AQE_MIN_BYTES <= 0:
         return
     try:
@@ -198,6 +204,7 @@ def _gate_aqe(spark, source: DataFrame) -> None:
     except Exception:
         return
     small = total < AQE_MIN_BYTES
+    spark.conf.set("codegraph.input_bytes", str(total))
     if small:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("codegraph.dict_broadcast", "true" if small else "false")
@@ -205,14 +212,13 @@ def _gate_aqe(spark, source: DataFrame) -> None:
 
 
 def _log_gate(spark, measured: str) -> None:
-    """One line per run naming what the gate left in force: the planner,
-    the dictionary-join strategy and the graph write shape."""
-    aqe = materialize._aqe_on(spark)
+    """One line per run naming what the gate left in force: the planner
+    (which fixes the graph write shape, see
+    ``materialize.cluster_for_write``) and the dictionary-join strategy."""
     bc = spark.conf.get("codegraph.dict_broadcast", "false") == "true"
-    log.info("gate: %s -> planner %s, dict joins %s, graph writes %s",
-             measured, "AQE" if aqe else "classic",
-             "broadcast" if bc else "shuffle_hash",
-             materialize.write_shape(spark))
+    log.info("gate: %s -> planner %s, dict joins %s", measured,
+             "AQE" if materialize.aqe_on(spark) else "classic",
+             "broadcast" if bc else "shuffle_hash")
 
 
 def purge(spark, graph_dir: str, repo: str) -> None:

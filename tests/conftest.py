@@ -1,6 +1,14 @@
 from __future__ import annotations
 
+import os
+
 import pytest
+
+# the session default driver heap (48g) lets the one shared test JVM grow
+# past a 16 GB host's memory over the suite, and the kernel then kills it;
+# 4g starves shuffled hash joins late in the suite (cached fixtures hold
+# storage memory); 8g leaves both room
+os.environ.setdefault("CODEGRAPH_DRIVER_MEM", "8g")
 
 
 @pytest.fixture(scope="session")

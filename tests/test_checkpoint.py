@@ -50,6 +50,7 @@ def test_resume_after_partial_run(spark, tiny_source, tmp_path):
     res = run_checkpointed(spark, run_dir, tiny_source)
     assert res["edges"].count() > 0
     assert ledger.is_done("edges")
+    assert ledger.is_done("files")
     assert res["files"].count() == discover(tiny_source).count()
 
 

@@ -73,3 +73,26 @@ def test_aqe_writer_rebalances_by_bucket(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     assert _rows(spark.read.parquet(out)) == _rows(nodes)
+
+
+def test_classic_writer_splits_a_large_input_bucket(spark, tmp_path):
+    from codegraph.materialize import (WRITER_TARGET_BYTES, write_table,
+                                       writers_per_bucket)
+
+    one_repo = _fleet(spark, repos=1)
+    assert writers_per_bucket(spark) == 1
+    spark.conf.set("codegraph.input_bytes", str(3 * WRITER_TARGET_BYTES))
+    try:
+        assert writers_per_bucket(spark) == 3
+        spark.conf.set("codegraph.input_bytes", str(100 * WRITER_TARGET_BYTES))
+        assert writers_per_bucket(spark) == int(
+            spark.conf.get("spark.sql.shuffle.partitions"))
+        spark.conf.set("codegraph.input_bytes", str(3 * WRITER_TARGET_BYTES))
+        out = str(tmp_path / "nodes")
+        write_table(one_repo, out)
+    finally:
+        spark.conf.unset("codegraph.input_bytes")
+    # a single bucket still gets several writers when the input is large
+    (n,) = _files_per_bucket(out).values()
+    assert 1 < n <= 3
+    assert _rows(spark.read.parquet(out)) == _rows(one_repo)
