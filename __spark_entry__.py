@@ -107,24 +107,15 @@ def _records(spark: SparkSession, sf_dir: str):
     """Extraction records over the discovered fixture source (cached per
     session+sf)."""
     from codegraph import pipeline as P
-    from codegraph.extract import extract_records
-    from codegraph.extract.dispatch import scan_ts_configs, scan_ts_projects
-    from codegraph.schema import ACC_ORDER
 
     key = f"codegraph_records_{gen.sf_name_from_dir(sf_dir)}"
     if not hasattr(spark, "_cg_cache"):
         spark._cg_cache = {}
     if key in spark._cg_cache:
         return spark._cg_cache[key]
-    src = P.discover(_fixture_df(spark, sf_dir, "source_files"))
-    ts_projects = scan_ts_projects(src)
-    ts_configs = scan_ts_configs(src)
-    pkg_meta = {}
-    for r in _fixture_df(spark, sf_dir, "pkg_metadata").collect():
-        pkg_meta[(r["source"], r["pkg"])] = (r["homepage"], r["repository"],
-                                             r["project_url"])
-    rec = extract_records(src, ACC_ORDER["Private"], ts_projects, pkg_meta,
-                          ts_configs=ts_configs).persist()
+    pkg_meta = P.collect_pkg_meta(_fixture_df(spark, sf_dir, "pkg_metadata"))
+    rec = P.extract(P.discover(_fixture_df(spark, sf_dir, "source_files")),
+                    None, pkg_meta).persist()
     spark._cg_cache[key] = rec
     return rec
 

@@ -7,7 +7,7 @@
   replica defines a deterministic order — highest (file_path, start_line)
   wins — so reruns are stable.
 
-* ``connected_components`` is the north-star cross-file symbol unification:
+* ``connected_components`` (the operator behind the ``kg_cc`` query):
   iterative hash-min label propagation PLUS pointer doubling (each round
   also replaces every label by its label's label — the path-halving step of
   Shiloach-Vishkin-style MapReduce CC), all as DataFrame self-joins with a
@@ -78,25 +78,3 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         if changed == 0:
             break
     return labels
-
-
-def unify_symbols_by_fqn(symbols: DataFrame) -> DataFrame:
-    """Optional north-star canonicalization: symbols sharing (repo, fqn)
-    are aliases (partial classes, re-declarations across files); returns a
-    mapping (repo, key, canonical_key) via connected components over the
-    same-fqn alias graph. NOT applied in the fidelity pipeline (the reference
-    keeps distinct keys distinct); exposed as its own operator."""
-    keyed = symbols.select("repo", "key", "fqn").filter(F.col("fqn").isNotNull())
-    pairs = (
-        keyed.alias("a").join(keyed.alias("b"), ["repo", "fqn"])
-        .filter(F.col("a.key") < F.col("b.key"))
-        .select(F.concat_ws("\x1e", "repo", "a.key").alias("src"),
-                F.concat_ws("\x1e", "repo", "b.key").alias("dst"))
-    )
-    comps = connected_components(pairs)
-    return (
-        comps.select(
-            F.split(F.col("node"), "\x1e").getItem(0).alias("repo"),
-            F.split(F.col("node"), "\x1e").getItem(1).alias("key"),
-            F.split(F.col("comp"), "\x1e").getItem(1).alias("canonical_key"))
-    )

@@ -70,13 +70,14 @@ def main(argv=None):
     else:
         res = pipeline.run_pipeline(spark, source, **kwargs)
     materialize.write_graph(res["nodes"], res["edges"], res["files"],
-                            args.output)
+                            args.output, plan=res["plan"])
     if diff is not None:
         # F4: mark deleted files + cascade to their declared symbols
         marked = pipeline.mark_deleted(
             spark.read.parquet(f"{args.output}/nodes"),
             spark.read.parquet(f"{args.output}/edges"), diff)
-        materialize.write_table(marked, f"{args.output}/nodes_marked")
+        materialize.write_table(marked, f"{args.output}/nodes_marked",
+                                plan=res["plan"])
     print(f"nodes={spark.read.parquet(f'{args.output}/nodes').count()} "
           f"edges={spark.read.parquet(f'{args.output}/edges').count()}")
     return 0

@@ -75,9 +75,9 @@ broadcast vs shuffle strategies (AQE skew-join enabled in session.py):
    legitimately hold >1 candidate receiver — keep a small per-mid merge
    groupBy over a compact 64-bit ``mid = xxhash64(identity columns)``.
 
-   Join strategy is byte-gated (``codegraph.dict_broadcast``, set by
-   ``pipeline._gate_aqe`` from the listed input size): below the gate the
-   grouped dictionaries are broadcast — the mention side is never
+   Join strategy is byte-gated (the ``broadcast`` argument, which
+   ``pipeline.plan_inputs`` picks from the listed input size): below the
+   gate the grouped dictionaries are broadcast — the mention side is never
    shuffled at all and the resolution pipeline is a chain of map-side hash
    joins inside one codegen span. At or above the gate (100 TB: the
    dictionaries scale with the corpus and must not concentrate on the
@@ -224,16 +224,6 @@ def _as_edge(df: DataFrame, dst_col: str) -> DataFrame:
                      F.col(dst_col).alias("dst_key"))
 
 
-def _use_dict_broadcast(df: DataFrame) -> bool:
-    """Byte-gated dictionary join strategy (set by pipeline._gate_aqe from
-    the listed source size; default ON for non-file-backed inputs, whose
-    dictionaries are test/stream-batch sized). Broadcast keeps the mention
-    side un-shuffled; the shuffle_hash fallback is the 100 TB path where
-    per-repo dictionaries scale with the corpus."""
-    return (df.sparkSession.conf.get(
-        "codegraph.dict_broadcast", "true") == "true")
-
-
 def _dict_join(left: DataFrame, right: DataFrame, cond: list, how: str,
                bc: bool, salt: int = 0,
                lsalt: Column | None = None) -> DataFrame:
@@ -328,7 +318,7 @@ _A_OK_SQL = ("_best IS NOT NULL AND NOT ("
 
 
 def resolve_mentions(records: DataFrame, symbols: DataFrame,
-                     salt: int = 0) -> DataFrame:
+                     salt: int = 0, broadcast: bool = True) -> DataFrame:
     """mention records -> resolved candidate edges (repo, src_key, rel_type,
     dst_key). Duplicate mentions produce duplicate candidate edges; MERGE
     semantics make edge multiplicity irrelevant (§1.4.4) and ``link_edges``
@@ -366,7 +356,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
         # dictionary frames.
         return df.localCheckpoint(eager=False)
 
-    bc = _use_dict_broadcast(records)
+    bc = broadcast
     types, members, nss = build_dictionaries(symbols)
     mentions = _p(records.filter(F.col("rec") == "mention")
                   .select(*_MENTION_ID_COLS))
@@ -835,14 +825,16 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
             .unionByName(member_edges_b)
             .unionByName(ext_edges).unionByName(ext_using))
 
-def link_edges(candidate_edges: DataFrame, symbols: DataFrame) -> DataFrame:
+def link_edges(candidate_edges: DataFrame, symbols: DataFrame,
+               broadcast: bool = True) -> DataFrame:
     """J1/F9: keep edges whose BOTH endpoints exist as Symbol nodes in the
     same repo (MergeRelationships.cypher:1-5); output distinct triples
     (apoc.merge.relationship is idempotent). The symbol-key side rides the
-    same byte gate as the dictionaries: broadcast semi-joins below it (the
-    key set is bounded by the gated input size), shuffle_hash at scale."""
+    same byte gate as the dictionaries: ``broadcast`` semi-joins below it
+    (the key set is bounded by the gated input size), shuffle_hash at
+    scale."""
     sk = symbols.select("repo", F.col("key").alias("_k")).distinct()
-    if _use_dict_broadcast(symbols):
+    if broadcast:
         src = F.broadcast(sk.withColumnRenamed("_k", "src_key"))
         dst = F.broadcast(sk.withColumnRenamed("_k", "dst_key"))
     else:

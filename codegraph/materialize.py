@@ -15,6 +15,7 @@ instead of encoding rows.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -62,23 +63,25 @@ def aqe_on(spark: SparkSession) -> bool:
 WRITER_TARGET_BYTES = 8 * 1024 ** 2
 
 
-def writers_per_bucket(spark: SparkSession) -> int:
+def writers_per_bucket(spark: SparkSession, plan=None) -> int:
     """Classic-planner tasks that share one bucket: one per
-    ``WRITER_TARGET_BYTES`` of the source input ``_gate_aqe`` measured, at
-    most one per shuffle partition. Any one bucket may hold the whole input
-    (a single repo, or one hot repo), so the count is sized from the total,
-    not from an even spread over buckets: a few-repo input keeps its writer
-    parallelism, and an input under 8 MiB (or one the gate did not size)
-    gets one writer and one file per bucket."""
-    measured = int(spark.conf.get("codegraph.input_bytes", "0"))
+    ``WRITER_TARGET_BYTES`` of the source input ``plan`` (a
+    ``pipeline.InputPlan``) measured, at most one per shuffle partition.
+    Any one bucket may hold the whole input (a single repo, or one hot
+    repo), so the count is sized from the total, not from an even spread
+    over buckets: a few-repo input keeps its writer parallelism, and an
+    input under 8 MiB (or no plan, or an unsized one) gets one writer and
+    one file per bucket."""
+    measured = (plan and plan.bytes) or 0
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(parts, -(-measured // WRITER_TARGET_BYTES)))
 
 
-def cluster_for_write(df: DataFrame, bucketed: bool = True) -> DataFrame:
+def cluster_for_write(df: DataFrame, bucketed: bool = True,
+                      plan=None) -> DataFrame:
     """Cluster ``df`` so each output partition is written by few tasks.
 
-    Classic planner (``_gate_aqe`` turns AQE off below its byte gate):
+    Classic planner (``plan_inputs`` turns AQE off below its byte gate):
     ``repartition`` by ``bucket`` and a row-hash sub-key with
     ``writers_per_bucket`` values, so a bucket is written by that many tasks
     at most — one task and one file for a small input; an unbucketed table
@@ -92,24 +95,25 @@ def cluster_for_write(df: DataFrame, bucketed: bool = True) -> DataFrame:
         return df.hint("rebalance", "bucket") if bucketed else df.hint("rebalance")
     if not bucketed:
         return df.repartition(1)
-    k = writers_per_bucket(spark)
+    k = writers_per_bucket(spark, plan)
     if k == 1:
         return df.repartition("bucket")
     # a hash of the whole row, so a retried task writes the same rows
     return df.repartition("bucket", F.pmod(F.xxhash64(*df.columns), F.lit(k)))
 
 
-def write_table(df: DataFrame, path: str, bucketed: bool = True) -> None:
+def write_table(df: DataFrame, path: str, bucketed: bool = True,
+                plan=None) -> None:
     """The one writer for graph tables: ``bucketed`` tables are partitioned
     by repo-hash ``bucket`` (one file per bucket for a small input)."""
-    writer = cluster_for_write(df, bucketed).write.mode("overwrite")
+    writer = cluster_for_write(df, bucketed, plan).write.mode("overwrite")
     if bucketed:
         writer = writer.partitionBy("bucket")
     writer.parquet(path)
 
 
 def checkpoint_stage(spark: SparkSession, ledger: Ledger, stage: str,
-                     build, bucketed: bool = False) -> DataFrame:
+                     build, bucketed: bool = False, plan=None) -> DataFrame:
     """Run ``build()`` -> DataFrame and persist it as a parquet checkpoint,
     unless the ledger already has it (resume path: read back, skip compute).
     ``bucketed`` stages are graph tables and go through ``write_table``."""
@@ -119,7 +123,7 @@ def checkpoint_stage(spark: SparkSession, ledger: Ledger, stage: str,
     ledger.mark(stage, "start")
     df = build()
     if bucketed:
-        write_table(df, out)
+        write_table(df, out, plan=plan)
     else:
         df.write.mode("overwrite").parquet(out)
     ledger.mark(stage, "done", path=out)
@@ -128,7 +132,7 @@ def checkpoint_stage(spark: SparkSession, ledger: Ledger, stage: str,
 
 def write_graph(nodes: DataFrame, edges: DataFrame, files: DataFrame,
                 out_dir: str, stamp: bool = False,
-                run_ts: float | None = None) -> None:
+                run_ts: float | None = None, plan=None) -> None:
     """Final graph export. With ``stamp=True`` every row carries the
     reference's upsert-boundary provenance columns (UpsertSymbols.cypher:
     18-19 sets ``updatedAt = datetime()`` + ``CodeToNeo4j = true`` on every
@@ -136,7 +140,8 @@ def write_graph(nodes: DataFrame, edges: DataFrame, files: DataFrame,
     driver-side, never per-task, so re-executed tasks stay deterministic —
     and ``code_to_neo4j`` reproduces the scoping flag a downstream Neo4j
     load uses to find rows this tool owns. Literal columns are free at any
-    scale (constant-folded, no shuffle)."""
+    scale (constant-folded, no shuffle). ``plan`` (the run's
+    ``pipeline.InputPlan``) sizes the writers per bucket."""
     if stamp:
         ts = F.timestamp_seconds(F.lit(run_ts if run_ts is not None
                                        else time.time()))
@@ -144,8 +149,8 @@ def write_graph(nodes: DataFrame, edges: DataFrame, files: DataFrame,
             return (df.withColumn("updated_at", ts)
                     .withColumn("code_to_neo4j", F.lit(True)))
         nodes, edges, files = _stamped(nodes), _stamped(edges), _stamped(files)
-    write_table(nodes, os.path.join(out_dir, "nodes"))
-    write_table(edges, os.path.join(out_dir, "edges"))
+    write_table(nodes, os.path.join(out_dir, "nodes"), plan=plan)
+    write_table(edges, os.path.join(out_dir, "edges"), plan=plan)
     write_table(files, os.path.join(out_dir, "files"), bucketed=False)
 
 
@@ -172,65 +177,52 @@ def run_checkpointed(spark: SparkSession, run_dir: str, source: DataFrame,
                      commit_log: DataFrame | None = None,
                      assembly_refs: DataFrame | None = None,
                      pkg_metadata: DataFrame | None = None,
-                     **pipeline_kwargs) -> dict[str, DataFrame]:
-    """Checkpoint-resumable pipeline driver: extraction, linking, and the
-    node/edge/files tables each land as a ledger-tracked parquet stage. A
-    killed run re-invoked with the same run_dir resumes at the first
-    incomplete stage."""
-    from codegraph import canon, link
+                     min_accessibility: str = "Private",
+                     diff: DataFrame | None = None, salt: int = 0,
+                     ingest_commits: bool = True) -> dict:
+    """Checkpoint-resumable ``pipeline.run_pipeline``: the same stages, with
+    extraction, linking and the node/edge/files tables each landing as a
+    ledger-tracked parquet stage that the next stage reads back. A killed
+    run re-invoked with the same run_dir resumes at the first incomplete
+    stage; a completed one builds nothing."""
+    from codegraph import canon
     from codegraph import pipeline as P
 
     ledger = Ledger(run_dir)
-    P._gate_aqe(spark, source)  # also gates the dictionary join strategy
+    plan = P.plan_inputs(spark, source)
+    files_src = P.apply_diff_filter(P.discover(source), diff)
 
-    filtered = P.apply_diff_filter(P.discover(source),
-                                   pipeline_kwargs.pop("diff", None))
+    def stage(name, build, bucketed=False):
+        return checkpoint_stage(spark, ledger, name, build, bucketed, plan)
 
-    records = checkpoint_stage(
-        spark, ledger, "extract",
-        lambda: _extract_stage(filtered, pkg_metadata, **pipeline_kwargs))
+    records = stage("extract", lambda: P.extract(
+        files_src, plan, P.collect_pkg_meta(pkg_metadata), min_accessibility))
+    symbols = canon.dedup_symbols(records.filter("rec = 'symbol'"))
+    linked = stage("linked", lambda: P.link(records, symbols, plan, salt))
 
-    symbols = canon.dedup_symbols(records.filter(F.col("rec") == "symbol"))
-    resolved = link.resolve_mentions(records, symbols,
-                                     salt=pipeline_kwargs.get("salt", 0))
-    rels = records.filter(F.col("rec") == "rel").select(
-        "repo", "src_key", "dst_key", "rel_type")
-    linked = checkpoint_stage(
-        spark, ledger, "linked",
-        lambda: link.link_edges(
-            rels.unionByName(resolved.select("repo", "src_key", "dst_key", "rel_type")),
-            symbols))
+    @functools.cache
+    def assembled():
+        # the records come back from their checkpoint: re-detect whether
+        # their package URLs need the Spark-side join
+        return P.assemble(spark, files_src, records, symbols, linked,
+                          commit_log, assembly_refs,
+                          pkg_metadata if P.pkg_dim_over_cap(pkg_metadata)
+                          else None, ingest_commits, persist=False)
 
-    res = P.run_pipeline(spark, source, commit_log=commit_log,
-                         assembly_refs=assembly_refs, pkg_metadata=pkg_metadata,
-                         persist=False, records=records, **pipeline_kwargs)
-    nodes = checkpoint_stage(spark, ledger, "nodes", lambda: res["nodes"],
-                             bucketed=True)
-    edges = checkpoint_stage(spark, ledger, "edges", lambda: res["edges"],
-                             bucketed=True)
-    files = checkpoint_stage(spark, ledger, "files", lambda: res["files"])
-    metrics = checkpoint_stage(spark, ledger, "metrics",
-                               lambda: lineage_metrics(filtered, records))
+    nodes = stage("nodes", lambda: assembled()["nodes"], bucketed=True)
+    edges = stage("edges", lambda: assembled()["edges"], bucketed=True)
+    files = stage("files", lambda: assembled()["files"])
+    metrics = stage("metrics", lambda: lineage_metrics(files_src, records))
     return {"nodes": nodes, "edges": edges, "files": files,
-            "records": records, "linked": linked, "metrics": metrics}
+            "records": records, "linked": linked, "metrics": metrics,
+            "plan": plan}
 
 
 def _extract_stage(filtered: DataFrame, pkg_metadata: DataFrame | None,
-                   min_accessibility: str = "Private", **_kw) -> DataFrame:
-    from codegraph.extract import extract_records
-    from codegraph.extract.dispatch import (attach_ts_projects,
-                                            collect_pkg_meta,
-                                            scan_ts_configs,
-                                            scan_ts_projects)
-    from codegraph.schema import ACC_ORDER
+                   min_accessibility: str = "Private") -> DataFrame:
+    """``pipeline.extract`` over ``filtered`` as partitioned, for callers
+    that stage extraction themselves."""
+    from codegraph import pipeline as P
 
-    ts_projects = scan_ts_projects(filtered)
-    ts_configs = scan_ts_configs(filtered) if ts_projects is not None else None
-    # over-cap pkg-metadata dim -> None: extract with an EMPTY dict (never
-    # broadcast None into the UDF), and leave the URL records to the
-    # Spark-side pkg_urls_via_join union — run_pipeline re-detects join mode
-    # when handed a precomputed extraction output (pkg_dim_over_cap)
-    pkg_meta = collect_pkg_meta(pkg_metadata)
-    src = filtered if ts_projects is not None else attach_ts_projects(filtered)
-    return extract_records(src, ACC_ORDER[min_accessibility],
-                           ts_projects, pkg_meta or {}, ts_configs=ts_configs)
+    return P.extract(filtered, None, P.collect_pkg_meta(pkg_metadata),
+                     min_accessibility)

@@ -21,11 +21,15 @@ from __future__ import annotations
 import logging
 import os
 import re
+from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from codegraph import canon, gitmeta, link, materialize
+from codegraph import canon, gitmeta, materialize
+from codegraph import link as L
 from codegraph import schema as S
 from codegraph.extract import extract_records
 from codegraph.extract.dispatch import (attach_ts_projects, collect_pkg_meta,
@@ -110,35 +114,6 @@ def merge_reindex(old_nodes: DataFrame, old_edges: DataFrame,
     return merged_nodes, merged_edges
 
 
-def _estimated_splits(spark, df: DataFrame, target: int) -> int:
-    """Scan-split estimate for the pre-extraction repartition gate. File
-    count >= target short-circuits (ample splits, no sizing needed); below
-    that the (small) file list is sized via the Hadoop FS API and each file
-    contributes ceil(bytes / spark.sql.files.maxPartitionBytes) splits, so
-    few-but-large parquet files with plenty of row-group splits don't
-    trigger a spurious full-input shuffle."""
-    try:
-        inputs = df.inputFiles()
-    except Exception:
-        return target  # non-file source (e.g. in-memory test DF): no gate
-    if len(inputs) >= target:
-        return len(inputs)
-    mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                      "128MB"))
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    hconf = sc._jsc.hadoopConfiguration()
-    splits = 0
-    try:
-        for uri in inputs:
-            p = jvm.org.apache.hadoop.fs.Path(uri)
-            size = p.getFileSystem(hconf).getFileStatus(p).getLen()
-            splits += max(1, -(-size // mpb))
-    except Exception:
-        return len(inputs)  # sizing unavailable -> old file-count behavior
-    return splits
-
-
 def _parse_bytes(v: str) -> int:
     """Spark size-string ('128MB', '134217728b', '1g') -> bytes."""
     m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", str(v).lower())
@@ -148,77 +123,94 @@ def _parse_bytes(v: str) -> int:
 
 
 # listed-source-input threshold below which adaptive execution is disabled
-# for the run (see _gate_aqe); override with CODEGRAPH_AQE_MIN_BYTES
+# for the run (see plan_inputs); override with CODEGRAPH_AQE_MIN_BYTES
 # (0 leaves AQE untouched everywhere)
 AQE_MIN_BYTES = int(os.environ.get("CODEGRAPH_AQE_MIN_BYTES",
                                    str(8 * 1024 ** 3)))
 
 
-def _gate_aqe(spark, source: DataFrame) -> None:
-    """Scale-gate for adaptive query execution AND the dictionary join
-    strategy. AQE pays a driver-side re-planning round-trip per shuffle
-    stage; across the edge DAG that is pure critical-path latency when none
-    of its wins can apply — partitions are KB-MB-sized and nothing re-plans
-    differently (measured, paired A/B/A/B at sf0.1: 51.6/52.8 s AQE-off vs
-    84.5/78.5 s AQE-on, the whole delta in the edge phase). Below
-    AQE_MIN_BYTES of listed file input the run uses the classic planner; at
-    or above it (or when the input is not file-backed, can't be sized, or
-    lists >256 files) AQE keeps the session default — at 100 TB skew-join
-    splitting and partition coalescing are worth every re-plan.
+@dataclass(frozen=True)
+class InputPlan:
+    """What one listing of the source input decided for a run. ``bytes`` is
+    None when the input was not sized (in-memory, >256 files, or the gate
+    is off); ``splits`` estimates the scan splits; ``aqe`` is the planner
+    left in force and ``dict_broadcast`` the dictionary-join strategy."""
+    bytes: int | None
+    files: int
+    splits: int
+    aqe: bool
+    dict_broadcast: bool
 
-    The same byte measurement gates ``codegraph.dict_broadcast`` (read by
-    link.py): below the gate the per-repo symbol dictionaries are a small
-    fraction of the input (measured <=2% of source bytes on the fixture
-    corpora) and are broadcast, so the mention side of every linking join
-    is never shuffled; at or above it — or when the input lists >256 files,
-    i.e. real scale — the dictionaries scale with the corpus, must not
-    concentrate on the driver, and every dictionary join falls back to the
-    shuffle_hash path. Each decision is logged once per run so a bench
-    artifact can state which planner/join strategy ran: an INFO line on the
-    ``codegraph`` logger, which the CLI sends to stderr and a library caller
-    configures itself.
 
-    The measured byte total is kept as ``codegraph.input_bytes``, from which
-    ``materialize.writers_per_bucket`` sizes the classic-planner writers."""
-    spark.conf.unset("codegraph.input_bytes")
-    if AQE_MIN_BYTES <= 0:
-        return
+def plan_inputs(spark, source: DataFrame) -> InputPlan:
+    """List and size the source input once; gate adaptive query execution
+    and the dictionary join strategy on its bytes.
+
+    AQE pays a driver-side re-planning round-trip per shuffle stage; across
+    the edge DAG that is pure critical-path latency when none of its wins
+    can apply — partitions are KB-MB-sized and nothing re-plans differently
+    (measured, paired A/B/A/B at sf0.1: 51.6/52.8 s AQE-off vs 84.5/78.5 s
+    AQE-on, the whole delta in the edge phase). Below AQE_MIN_BYTES of
+    listed file input the run uses the classic planner (set as
+    ``spark.sql.adaptive.enabled``, the key Spark itself reads); at or above
+    it — or when the input is in-memory, can't be sized, or lists >256
+    files — AQE keeps the session default: at 100 TB skew-join splitting and
+    partition coalescing are worth every re-plan.
+
+    The same measurement picks the dictionary joins (``link``): below the
+    gate the per-repo symbol dictionaries are a small fraction of the input
+    (measured <=2% of source bytes on the fixture corpora) and are
+    broadcast, so the mention side of every linking join is never shuffled;
+    otherwise the dictionaries scale with the corpus, must not concentrate
+    on the driver, and every dictionary join takes the shuffle_hash path.
+    The decision is logged once per run as an INFO line on the
+    ``codegraph`` logger, which the CLI sends to stderr and a library
+    caller configures itself.
+
+    ``splits`` counts each file's ``ceil(bytes / maxPartitionBytes)``
+    row-group splits, so few-but-large parquet files don't trigger a
+    spurious full-input shuffle before extraction; an unsized listing
+    counts its files."""
     try:
         inputs = source.inputFiles()
-    except Exception:
-        return  # in-memory source (tests, streaming batches): leave as-is
-    if not inputs or len(inputs) > 256:
-        # many-file input is real scale; don't spend driver listing time —
-        # keep AQE on and take the shuffle-hash dictionary path
-        spark.conf.set("codegraph.dict_broadcast", "false")
-        _log_gate(spark, f"{len(inputs)} input files (>256)")
-        return
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    hconf = sc._jsc.hadoopConfiguration()
-    total = 0
-    try:
-        for uri in inputs:
-            p = jvm.org.apache.hadoop.fs.Path(uri)
-            total += p.getFileSystem(hconf).getFileStatus(p).getLen()
-    except Exception:
-        return
-    small = total < AQE_MIN_BYTES
-    spark.conf.set("codegraph.input_bytes", str(total))
-    if small:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("codegraph.dict_broadcast", "true" if small else "false")
-    _log_gate(spark, f"{total} input bytes")
-
-
-def _log_gate(spark, measured: str) -> None:
-    """One line per run naming what the gate left in force: the planner
-    (which fixes the graph write shape, see
-    ``materialize.cluster_for_write``) and the dictionary-join strategy."""
-    bc = spark.conf.get("codegraph.dict_broadcast", "false") == "true"
+    except AnalysisException:
+        inputs = []  # a streaming source: unsized, like an in-memory one
+    n, sc = len(inputs), spark.sparkContext
+    aqe = materialize.aqe_on(spark)
+    sizes = None
+    # the gate sizes up to 256 files, the split estimate fewer than cores
+    if 0 < n and (n <= 256 or n < sc.defaultParallelism):
+        hconf = sc._jsc.hadoopConfiguration()
+        try:
+            paths = [sc._jvm.org.apache.hadoop.fs.Path(u) for u in inputs]
+            sizes = [p.getFileSystem(hconf).getFileStatus(p).getLen()
+                     for p in paths]
+        except Py4JJavaError:
+            sizes = None  # a listed file vanished or can't be stat'ed
+    if sizes is None:
+        splits = n
+    else:
+        mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes",
+                                          "128MB"))
+        splits = sum(max(1, -(-s // mpb)) for s in sizes)
+    if AQE_MIN_BYTES <= 0:
+        return InputPlan(None, n, splits, aqe, True)
+    if sizes is None or n > 256:
+        # in-memory or many-file input: real scale or unknown size — keep
+        # AQE as it is and take the shuffle-hash dictionary path
+        plan = InputPlan(None, n, splits, aqe, False)
+        measured = f"{n} input files (>256)" if n > 256 else "unsized input"
+    else:
+        total = sum(sizes)
+        small = total < AQE_MIN_BYTES
+        if small:
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        plan = InputPlan(total, n, splits, aqe and not small, small)
+        measured = f"{total} input bytes"
     log.info("gate: %s -> planner %s, dict joins %s", measured,
-             "AQE" if materialize.aqe_on(spark) else "classic",
-             "broadcast" if bc else "shuffle_hash")
+             "AQE" if plan.aqe else "classic",
+             "broadcast" if plan.dict_broadcast else "shuffle_hash")
+    return plan
 
 
 def purge(spark, graph_dir: str, repo: str) -> None:
@@ -320,72 +312,54 @@ def tags_expr(ns_col: str):
 # ---------------------------------------------------------------------------
 
 
-def run_pipeline(
-    spark,
-    source: DataFrame,
-    commit_log: DataFrame | None = None,
-    assembly_refs: DataFrame | None = None,
-    pkg_metadata: DataFrame | None = None,
-    min_accessibility: str = "Private",
-    diff: DataFrame | None = None,
-    salt: int = 0,
-    ingest_commits: bool = True,
-    persist: bool = True,
-    records: DataFrame | None = None,
-    pkg_join_mode: bool | None = None,
-) -> dict[str, DataFrame]:
-    """Returns {'nodes', 'edges', 'files', 'symbols', 'records'}.
+def extract(files_src: DataFrame, plan: InputPlan | None,
+            pkg_meta: dict | None,
+            min_accessibility: str = "Private") -> DataFrame:
+    """Stage 1: ONE vectorized extraction pass over the discovered files.
+    ``pkg_meta`` is the collected package-metadata dim (``None`` over the
+    cap: extract with an empty dict and let ``assemble`` join the URLs
+    Spark-side). The stage is CPU-bound per row, so an input the plan
+    estimates at fewer splits than cores is spread over one partition per
+    core first; ``plan=None`` leaves the partitioning as it is."""
+    target = files_src.sparkSession.sparkContext.defaultParallelism
+    if plan is not None and plan.splits < target:
+        files_src = files_src.repartition(target)
+    # pre-scans (bounded dims -> broadcast inside extract_records); an
+    # over-cap TS-project dim (None) switches to the Spark-side path-prefix
+    # join instead of a driver dict
+    ts_projects = scan_ts_projects(files_src)
+    ts_configs = scan_ts_configs(files_src) if ts_projects is not None else None
+    src = (files_src if ts_projects is not None
+           else attach_ts_projects(files_src))
+    return extract_records(src, ACC_ORDER[min_accessibility], ts_projects,
+                           pkg_meta or {}, ts_configs=ts_configs)
 
-    min_accessibility follows the reference option (default NotApplicable
-    disables guard-A handlers; 'Private' emits everything — used for the
-    full-graph runs). Pass ``records`` (a checkpointed extraction output) to
-    skip re-extraction on resume; ``pkg_join_mode`` then says whether those
-    records were extracted with an over-cap (never-collected) pkg-metadata
-    dim — None re-detects it from the dim itself (pkg_dim_over_cap), so a
-    resumed/staged run with a big dim still unions the Spark-side URL join
-    instead of silently dropping every Url node."""
-    min_acc = ACC_ORDER[min_accessibility]
-    _gate_aqe(spark, source)
 
-    files_src = discover(source)
-    files_src = apply_diff_filter(files_src, diff)
+def link(records: DataFrame, symbols: DataFrame, plan: InputPlan | None,
+         salt: int = 0) -> DataFrame:
+    """Stage 2: entity linking (J1/F9) — mention resolution, then the
+    dangling-edge drop over resolved and extracted relationship edges. The
+    plan picks the dictionary-join strategy (broadcast without one)."""
+    bc = plan is None or plan.dict_broadcast
+    rels = records.filter(F.col("rec") == "rel").select(
+        "repo", "src_key", "dst_key", "rel_type")
+    resolved = L.resolve_mentions(records, symbols, salt=salt, broadcast=bc)
+    return L.link_edges(rels.unionByName(
+        resolved.select("repo", "src_key", "dst_key", "rel_type")),
+        symbols, broadcast=bc)
 
-    if records is None:
-        pkg_join_mode = False
-        # the extraction stage is CPU-bound per row: make sure it sees at
-        # least one split per core. Heuristic on listed input files (cheap,
-        # no RDD conversion); when the file COUNT is below parallelism the
-        # files may still be large enough to split into ample row-group
-        # partitions, so the split estimate uses actual bytes per
-        # maxPartitionBytes before forcing a shuffle of the whole input. At
-        # real scale the input supplies ample splits and this never fires.
-        target = spark.sparkContext.defaultParallelism
-        if _estimated_splits(spark, files_src, target) < target:
-            files_src = files_src.repartition(target)
-        # pre-scans (bounded dims -> broadcast inside extract_records);
-        # an over-cap TS-project dim (None) switches to the Spark-side
-        # path-prefix join instead of a driver dict
-        ts_projects = scan_ts_projects(files_src)
-        ts_configs = scan_ts_configs(files_src) if ts_projects is not None else None
-        # over-cap pkg-metadata dim (None) switches to the Spark-side join
-        # of URLs onto the extracted dependency rows (pkg_urls_via_join)
-        pkg_meta = collect_pkg_meta(pkg_metadata)
-        pkg_join_mode = pkg_meta is None
-        extract_src = (files_src if ts_projects is not None
-                       else attach_ts_projects(files_src))
-        records = extract_records(extract_src, min_acc, ts_projects,
-                                  pkg_meta or {}, ts_configs=ts_configs)
-        if persist:
-            records = records.persist()
-    elif pkg_join_mode is None:
-        pkg_join_mode = pkg_dim_over_cap(pkg_metadata)
 
-    raw_symbols = records.filter(F.col("rec") == "symbol")
-    symbols = canon.dedup_symbols(raw_symbols)
-    if persist:
-        # symbols feed the dictionary builds, the J1 semi-joins, DECLARES,
-        # tags, and the node assembly — pay the window dedup once
-        symbols = symbols.persist()
+def assemble(spark, files_src: DataFrame, records: DataFrame,
+             symbols: DataFrame, linked: DataFrame,
+             commit_log: DataFrame | None = None,
+             assembly_refs: DataFrame | None = None,
+             overcap_pkg_metadata: DataFrame | None = None,
+             ingest_commits: bool = True,
+             persist: bool = True) -> dict[str, DataFrame]:
+    """Stage 3: git metadata, then node/edge assembly per label. Returns
+    {'nodes', 'edges', 'files'}. ``overcap_pkg_metadata`` is a package dim
+    too big for extraction to collect; its URLs are joined Spark-side."""
+    raw_symbols = records.filter("rec = 'symbol'")
 
     # --- files table (UpsertFile.cypher property set) ----------------------
     # razor files carry a PROMOTED key: the generated type's FQN
@@ -433,14 +407,6 @@ def run_pipeline(
         # re-analyzes the git-stats join subtree (blocks release on GC)
         files = files.localCheckpoint(eager=False)
 
-    # --- entity linking (J1/F9) --------------------------------------------
-    rels = records.filter(F.col("rec") == "rel").select(
-        "repo", "src_key", "dst_key", "rel_type")
-    resolved = link.resolve_mentions(records, symbols, salt=salt)
-    candidate_edges = rels.unionByName(
-        resolved.select("repo", "src_key", "dst_key", "rel_type"))
-    linked = link.link_edges(candidate_edges, symbols)
-
     # --- structural edges ---------------------------------------------------
     # DECLARES accumulates from every flushed symbol row (UpsertSymbols.cypher:20-22)
     # with the file side using the promoted key where one exists
@@ -476,9 +442,9 @@ def run_pipeline(
     # --- dependencies (S7/J6/A2) + URLs (J7) --------------------------------
     urls_rec = (records.filter(F.col("rec") == "url")
                 .select("repo", "url_dep_key", "url_key", "url_name").distinct())
-    if pkg_join_mode:
+    if overcap_pkg_metadata is not None:
         urls_rec = (urls_rec
-                    .unionByName(pkg_urls_via_join(records, pkg_metadata))
+                    .unionByName(pkg_urls_via_join(records, overcap_pkg_metadata))
                     .distinct())
     if assembly_refs is not None:
         deps = (assembly_refs.select(
@@ -621,7 +587,54 @@ def run_pipeline(
     edges = edges.withColumn(
         "bucket", F.pmod(F.xxhash64("repo"), F.lit(S.N_BUCKETS)).cast("int"))
 
-    return {
-        "nodes": nodes, "edges": edges, "files": files,
-        "symbols": symbols, "records": records, "linked": linked,
-    }
+    return {"nodes": nodes, "edges": edges, "files": files}
+
+
+def run_pipeline(
+    spark,
+    source: DataFrame,
+    commit_log: DataFrame | None = None,
+    assembly_refs: DataFrame | None = None,
+    pkg_metadata: DataFrame | None = None,
+    min_accessibility: str = "Private",
+    diff: DataFrame | None = None,
+    salt: int = 0,
+    ingest_commits: bool = True,
+    persist: bool = True,
+    records: DataFrame | None = None,
+) -> dict:
+    """Returns {'nodes', 'edges', 'files', 'symbols', 'records', 'linked',
+    'plan'}: ``plan_inputs``, then extract -> link -> assemble.
+
+    min_accessibility follows the reference option (default NotApplicable
+    disables guard-A handlers; 'Private' emits everything — used for the
+    full-graph runs). Pass ``records`` (a precomputed extraction output) to
+    skip extraction; whether its package URLs need the Spark-side join is
+    then re-detected from the dim itself (pkg_dim_over_cap), so a staged run
+    with a big dim still unions it instead of silently dropping every Url
+    node."""
+    plan = plan_inputs(spark, source)
+    files_src = apply_diff_filter(discover(source), diff)
+    if records is None:
+        # over-cap pkg-metadata dim (None) switches to the Spark-side join
+        # of URLs onto the extracted dependency rows (pkg_urls_via_join)
+        pkg_meta = collect_pkg_meta(pkg_metadata)
+        overcap = pkg_meta is None
+        records = extract(files_src, plan, pkg_meta, min_accessibility)
+        if persist:
+            records = records.persist()
+    else:
+        overcap = pkg_dim_over_cap(pkg_metadata)
+    # SQL-string predicates (here and in assemble) cost one py4j round
+    # trip each; a Column expression costs one per operator
+    symbols = canon.dedup_symbols(records.filter("rec = 'symbol'"))
+    if persist:
+        # symbols feed the dictionary builds, the J1 semi-joins, DECLARES,
+        # tags, and the node assembly — pay the window dedup once
+        symbols = symbols.persist()
+    linked = link(records, symbols, plan, salt)
+    out = assemble(spark, files_src, records, symbols, linked, commit_log,
+                   assembly_refs, pkg_metadata if overcap else None,
+                   ingest_commits, persist)
+    return {**out, "symbols": symbols, "records": records, "linked": linked,
+            "plan": plan}

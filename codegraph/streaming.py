@@ -32,7 +32,7 @@ def start_ingest(spark: SparkSession, drop_dir: str, out_dir: str,
     and appends (batch_id-stamped) symbol/edge deltas; downstream compaction
     applies MERGE semantics.
     """
-    from codegraph import canon, link
+    from codegraph import canon
     from codegraph.extract import extract_records
     from codegraph.schema import ACC_ORDER
 
@@ -43,17 +43,12 @@ def start_ingest(spark: SparkSession, drop_dir: str, out_dir: str,
               .parquet(drop_dir))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from codegraph.pipeline import discover
+        from codegraph import pipeline as P
 
-        files = discover(batch_df)
+        files = P.discover(batch_df)
         records = extract_records(files, min_acc, {}, {}).persist()
         symbols = canon.dedup_symbols(records.filter(F.col("rec") == "symbol"))
-        resolved = link.resolve_mentions(records, symbols)
-        rels = records.filter(F.col("rec") == "rel").select(
-            "repo", "src_key", "dst_key", "rel_type")
-        linked = link.link_edges(
-            rels.unionByName(resolved.select("repo", "src_key", "dst_key",
-                                             "rel_type")), symbols)
+        linked = P.link(records, symbols, None)
         (symbols.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(os.path.join(out_dir, "symbols_delta")))
         (linked.withColumn("batch_id", F.lit(batch_id))

@@ -37,18 +37,3 @@ def test_connected_components_long_chain_log_rounds(spark):
     comp = connected_components(edges, max_iter=12).collect()
     assert len(comp) == n + 1
     assert {r["comp"] for r in comp} == {"n000"}
-
-
-def test_unify_symbols_by_fqn(spark):
-    from codegraph.canon import unify_symbols_by_fqn
-
-    symbols = spark.createDataFrame(
-        [("r1", "k1", "global::A"), ("r1", "k2", "global::A"),
-         ("r1", "k3", "global::B"), ("r2", "k4", "global::A")],
-        "repo string, key string, fqn string")
-    m = {(r["repo"], r["key"]): r["canonical_key"]
-         for r in unify_symbols_by_fqn(symbols).collect()}
-    # same repo + same fqn unify to the min key; different repos never merge
-    assert m[("r1", "k1")] == m[("r1", "k2")] == "k1"
-    assert ("r1", "k3") not in m  # singleton fqn -> no alias pair
-    assert ("r2", "k4") not in m

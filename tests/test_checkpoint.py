@@ -10,25 +10,79 @@ import os
 pytestmark = pytest.mark.slow
 
 
-def test_resume_skips_completed_stages(spark, tiny_source, tmp_path):
-    from codegraph.materialize import Ledger, run_checkpointed
+STAGES = ("extract", "linked", "nodes", "edges", "files", "metrics")
 
+
+def _count_link_calls(monkeypatch):
+    from codegraph import link
+
+    calls = {"resolve_mentions": 0, "link_edges": 0}
+    for name in calls:
+        def counted(*a, _fn=getattr(link, name), _name=name, **k):
+            calls[_name] += 1
+            return _fn(*a, **k)
+        monkeypatch.setattr(link, name, counted)
+    return calls
+
+
+def _stage_mtimes(run_dir):
+    return {s: max(os.path.getmtime(os.path.join(d, f))
+                   for d, _, fs in os.walk(os.path.join(run_dir, s))
+                   for f in fs)
+            for s in STAGES}
+
+
+def test_resume_skips_completed_stages(spark, tiny_source, tmp_path,
+                                       monkeypatch):
+    from codegraph.materialize import run_checkpointed
+
+    calls = _count_link_calls(monkeypatch)
     run_dir = str(tmp_path / "run1")
     r1 = run_checkpointed(spark, run_dir, tiny_source)
     e1 = (r1["edges"].orderBy("repo", "src_key", "rel_type", "dst_key")
           .toPandas())
+    # linking runs once; assembly reads the linked checkpoint
+    assert calls == {"resolve_mentions": 1, "link_edges": 1}
 
     # simulate a restart: the ledger has all stages done; nothing recomputes
-    extract_dir = os.path.join(run_dir, "extract")
-    mtime = max(os.path.getmtime(os.path.join(extract_dir, f))
-                for f in os.listdir(extract_dir))
+    mtimes = _stage_mtimes(run_dir)
+    calls.update(resolve_mentions=0, link_edges=0)
     r2 = run_checkpointed(spark, run_dir, tiny_source)
     e2 = (r2["edges"].orderBy("repo", "src_key", "rel_type", "dst_key")
           .toPandas())
-    mtime2 = max(os.path.getmtime(os.path.join(extract_dir, f))
-                 for f in os.listdir(extract_dir))
-    assert mtime2 == mtime, "extract stage was recomputed on resume"
+    assert _stage_mtimes(run_dir) == mtimes, "a stage was recomputed on resume"
+    assert calls == {"resolve_mentions": 0, "link_edges": 0}
     assert e1.equals(e2)
+
+
+def _sorted_rows(df):
+    # a bucket-partitioned checkpoint reads back with ``bucket`` last
+    return sorted(map(repr, df.select(*sorted(df.columns)).collect()))
+
+
+@pytest.mark.parametrize("with_diff", [False, True])
+def test_checkpointed_run_matches_run_pipeline(spark, tiny_source, tmp_path,
+                                               with_diff):
+    """The checkpointed runner is run_pipeline with checkpoints: the same
+    nodes, edges and files, with or without an incremental diff."""
+    from codegraph.materialize import run_checkpointed
+    from codegraph.pipeline import discover, run_pipeline
+
+    diff = None
+    if with_diff:
+        paths = sorted(r["path"] for r in discover(tiny_source)
+                       .filter("repo = 'repo0000' AND path LIKE '%.cs'")
+                       .select("path").collect())[:3]
+        assert len(paths) == 3
+        diff = spark.createDataFrame([("repo0000", p, "M") for p in paths],
+                                     "repo string, path string, status string")
+    want = run_pipeline(spark, tiny_source, diff=diff)
+    got = run_checkpointed(spark, str(tmp_path / "run_diff"), tiny_source,
+                           diff=diff)
+    for table in ("nodes", "edges", "files"):
+        assert _sorted_rows(got[table]) == _sorted_rows(want[table]), table
+    if with_diff:
+        assert got["files"].count() == 3
 
 
 def test_resume_after_partial_run(spark, tiny_source, tmp_path):

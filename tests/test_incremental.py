@@ -85,7 +85,7 @@ def test_purge_recovers_dangling_old(spark, tiny_result, tmp_path):
 def test_repartition_gate_respects_row_group_splits(spark, tiny_source, tmp_path):
     """Few-but-large files: the pre-extraction repartition gate must count
     byte-derived splits, not raw file count (ADVICE r2)."""
-    from codegraph.pipeline import _estimated_splits, _parse_bytes
+    from codegraph.pipeline import _parse_bytes, plan_inputs
 
     assert _parse_bytes("128MB") == 128 * 1024 * 1024
     assert _parse_bytes("134217728b") == 134217728
@@ -100,8 +100,8 @@ def test_repartition_gate_respects_row_group_splits(spark, tiny_source, tmp_path
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "512b")
         # single file, but thousands of byte-splits -> gate must NOT fire
-        assert _estimated_splits(spark, df, target) >= target
+        assert plan_inputs(spark, df).splits >= target
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     # with the default 128MB the tiny file genuinely has few splits
-    assert _estimated_splits(spark, df, target) < target
+    assert plan_inputs(spark, df).splits < target

@@ -1,5 +1,6 @@
 """The bucket-clustered graph writer: one parquet file per bucket under the
-classic planner, the AQE rebalance hint at scale, identical rows either way."""
+classic planner, the AQE rebalance hint at scale, identical rows either way;
+and the input plan that sizes it."""
 
 import os
 
@@ -78,21 +79,44 @@ def test_aqe_writer_rebalances_by_bucket(spark, tmp_path):
 def test_classic_writer_splits_a_large_input_bucket(spark, tmp_path):
     from codegraph.materialize import (WRITER_TARGET_BYTES, write_table,
                                        writers_per_bucket)
+    from codegraph.pipeline import InputPlan
+
+    def plan(n_bytes):
+        return InputPlan(n_bytes, 1, 1, False, True)
 
     one_repo = _fleet(spark, repos=1)
     assert writers_per_bucket(spark) == 1
-    spark.conf.set("codegraph.input_bytes", str(3 * WRITER_TARGET_BYTES))
-    try:
-        assert writers_per_bucket(spark) == 3
-        spark.conf.set("codegraph.input_bytes", str(100 * WRITER_TARGET_BYTES))
-        assert writers_per_bucket(spark) == int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
-        spark.conf.set("codegraph.input_bytes", str(3 * WRITER_TARGET_BYTES))
-        out = str(tmp_path / "nodes")
-        write_table(one_repo, out)
-    finally:
-        spark.conf.unset("codegraph.input_bytes")
+    assert writers_per_bucket(spark, plan(None)) == 1
+    assert writers_per_bucket(spark, plan(3 * WRITER_TARGET_BYTES)) == 3
+    assert writers_per_bucket(spark, plan(100 * WRITER_TARGET_BYTES)) == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+    out = str(tmp_path / "nodes")
+    write_table(one_repo, out, plan=plan(3 * WRITER_TARGET_BYTES))
     # a single bucket still gets several writers when the input is large
     (n,) = _files_per_bucket(out).values()
     assert 1 < n <= 3
     assert _rows(spark.read.parquet(out)) == _rows(one_repo)
+
+
+def test_plan_inputs_sizes_the_listing_once(spark, tmp_path):
+    """One listing of the source decides the run: its bytes, the split
+    estimate, the planner and the dictionary-join strategy."""
+    from codegraph.pipeline import InputPlan, plan_inputs
+
+    p = str(tmp_path / "three_files")
+    _fleet(spark, parts=3).drop("bucket").write.parquet(p)
+    parts = [os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")]
+    assert len(parts) == 3
+    plan = plan_inputs(spark, spark.read.parquet(p))
+    assert plan == InputPlan(sum(map(os.path.getsize, parts)), 3, 3,
+                             False, True)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+
+    # an in-memory frame is unsized: shuffle_hash, AQE conf left as it is
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        plan = plan_inputs(spark, _fleet(spark))
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    assert plan == InputPlan(None, 0, 0, True, False)
