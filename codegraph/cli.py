@@ -4,7 +4,7 @@
         --input  /data/source_files.parquet \
         --commit-log /data/commit_log.parquet \
         --output /data/graph \
-        --min-accessibility Private --salt 8
+        --min-accessibility Private
 
 Mirrors the reference CLI surface (Program.cs:44-175) where it still makes
 sense for a table-in/table-out pipeline: --min-accessibility, --diff-base
@@ -30,8 +30,6 @@ def main(argv=None):
                     help="diff parquet (repo, path, status M|A|D) for incremental runs")
     ap.add_argument("--min-accessibility", default="NotApplicable",
                     help="reference default; use Private to emit everything")
-    ap.add_argument("--salt", type=int, default=0,
-                    help="dictionary salt replicas for hot-key skew")
     ap.add_argument("--purge-repo", default=None,
                     help="remove this repo's subgraph instead of indexing")
     ap.add_argument("--no-commits", action="store_true")
@@ -63,7 +61,7 @@ def main(argv=None):
 
     kwargs = dict(commit_log=commit_log, assembly_refs=assembly_refs,
                   pkg_metadata=pkg_metadata, diff=diff,
-                  min_accessibility=args.min_accessibility, salt=args.salt,
+                  min_accessibility=args.min_accessibility,
                   ingest_commits=not args.no_commits)
     if args.run_dir:
         res = materialize.run_checkpointed(spark, args.run_dir, source, **kwargs)

@@ -120,7 +120,7 @@ def repo_model(repo_idx: int, files_per_repo: int, seed: int = SEED,
     n_other = max(3, files_per_repo - n_cs - n_web - n_dart - n_cfg)
 
     # C# classes: name, namespace, cross-class references (class 0 is the hot
-    # one — referenced by ~30% of classes to exercise skew salting)
+    # one — referenced by ~30% of classes, so it is a skewed linking key)
     classes = []
     for i in range(n_cs):
         word = CLASS_WORDS[i % len(CLASS_WORDS)]

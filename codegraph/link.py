@@ -101,16 +101,16 @@ so every join key includes ``repo``.
 
 Skew: hot in-repo names (a 'Util' class referenced by most files) land on
 one grouped-dictionary key. Under the broadcast gate there is no shuffle to
-skew. On the shuffle path, ``salt > 0`` replicates the grouped dictionary S
-ways and routes each mention by a deterministic per-row hash of its
-identity columns, bounding the largest join partition (explicit skew
-salting per north_rule); AQE skew-join splitting covers residual imbalance
-at runtime.
+skew. The shuffle path keeps the session's AQE setting (on in
+``session.get_spark``; ``pipeline.plan_inputs`` only turns it off below the
+gate), and AQE skew-join splits an oversized partition of the hinted
+``shuffle_hash`` joins at runtime (the executed plan shows
+``ShuffledHashJoin(skew=true)``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codegraph.extract.base import RS, US
@@ -225,24 +225,13 @@ def _as_edge(df: DataFrame, dst_col: str) -> DataFrame:
 
 
 def _dict_join(left: DataFrame, right: DataFrame, cond: list, how: str,
-               bc: bool, salt: int = 0,
-               lsalt: Column | None = None) -> DataFrame:
+               bc: bool) -> DataFrame:
     """Join a mention-scale frame against a pre-grouped (1-row-per-key)
     dictionary. ``bc`` broadcasts the dictionary (map-side, no shuffle);
     otherwise a shuffle_hash hint builds the hash table on the grouped
-    dictionary side. ``salt`` (shuffle path only) replicates the dictionary
-    S ways and routes left rows by the deterministic per-row hash ``lsalt``
-    so one hot dictionary key cannot own a whole join partition."""
+    dictionary side."""
     if bc:
         return left.join(F.broadcast(right), on=cond, how=how)
-    if salt > 0 and lsalt is not None:
-        right = right.withColumn(
-            "_dsalt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
-        left = left.withColumn("_msalt",
-                               F.pmod(lsalt, F.lit(salt)).cast("int"))
-        cond = cond + [F.col("_msalt") == F.col("_dsalt")]
-        return (left.join(right.hint("shuffle_hash"), on=cond, how=how)
-                .drop("_msalt", "_dsalt"))
     return left.join(right.hint("shuffle_hash"), on=cond, how=how)
 
 
@@ -318,7 +307,7 @@ _A_OK_SQL = ("_best IS NOT NULL AND NOT ("
 
 
 def resolve_mentions(records: DataFrame, symbols: DataFrame,
-                     salt: int = 0, broadcast: bool = True) -> DataFrame:
+                     broadcast: bool = True) -> DataFrame:
     """mention records -> resolved candidate edges (repo, src_key, rel_type,
     dst_key). Duplicate mentions produce duplicate candidate edges; MERGE
     semantics make edge multiplicity irrelevant (§1.4.4) and ``link_edges``
@@ -385,14 +374,8 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
             "ns", "type_key", "type_display", "is_global")))
             .alias("tg_entries")))
 
-    # per-row routing hash for the shuffle-path salt: only columns present
-    # on EVERY mention-derived frame (m_from_key varies per call site, which
-    # is what spreads a hot dictionary key across partitions)
-    id_salt = F.xxhash64("repo", "m_from_key",
-                         F.coalesce(F.col("m_name"), F.lit("\x00")))
-
     def _attach_type(df: DataFrame, tok, prefix: str,
-                     usings: str = "m_usings", lsalt=None) -> DataFrame:
+                     usings: str = "m_usings") -> DataFrame:
         """Resolve ``tok`` against the ordered candidate-namespace list in
         ``usings`` (file namespace + local usings, then the repo's global
         usings at _GLOBAL_PRIO). Adds ``<prefix>_key`` / ``<prefix>_display``
@@ -403,7 +386,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
         j = _dict_join(df.select("*", tok.alias("_rtok")), typesg,
                        [F.col("repo") == F.col("tg_repo"),
                         F.col("_rtok") == F.col("tg_name")],
-                       "left", bc, salt, lsalt)
+                       "left", bc)
         j = j.select("*", F.expr(_twin_sql(usings)).alias("_twin"),
                      F.expr(_NGLOB_SQL).alias("_tng"))
         keep = [c for c in j.columns if c not in (
@@ -430,7 +413,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
                                   "invoke_static", "op", "chain_via")),
         _valid("CASE WHEN m_kind IN ('type', 'ctor') THEN m_name"
                " ELSE m_recv END"),
-        "t", lsalt=id_salt)
+        "t")
     p1 = _ck(p1.filter(F.col("t_display").isNotNull() | (kind == "type")))
 
     type_edges = _as_edge(
@@ -443,7 +426,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
     #     declaring symbol, and an own member hides a base member ------------
     bases = _ck(
         _attach_type(mentions.filter(F.col("m_kind") == "basesig"),
-                     F.col("m_name"), "b", lsalt=id_salt)
+                     F.col("m_name"), "b")
         .filter(F.col("b_display").isNotNull())
         .select(F.col("repo").alias("b_repo"),
                 F.col("m_recv").alias("derived_display"),
@@ -546,9 +529,8 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
             f" AND NOT startswith({tok_sql}, 'System.')"
             f" AND ({tok_sql}) NOT IN ({ext_list}) THEN {tok_sql} END")
 
-    ret_salt = F.expr("xxhash64(repo, rt_display, r_name)")
-    rets = _attach_type(rets_raw, _ret_valid("r_ret"), "rr", lsalt=ret_salt)
-    rets = _attach_type(rets, _ret_valid(unwrap), "ra", lsalt=ret_salt)
+    rets = _attach_type(rets_raw, _ret_valid("r_ret"), "rr")
+    rets = _attach_type(rets, _ret_valid(unwrap), "ra")
     retsg = _ck(
         rets.groupBy(F.col("repo").alias("rg_repo"),
                      F.col("rt_display").alias("rg_display"),
@@ -615,7 +597,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
              F.col("t_display") == F.col("rg_display"),
              F.col("_hname") == F.col("rg_name"),
              F.col("_hprop") == F.col("rg_prop")],
-            "left", bc, salt, id_salt)
+            "left", bc)
         hj = hj.select("*", F.expr(_happl).alias("_appl"))
         state = hj.select(*chain_keep, F.expr(_next).alias("t_display"),
                           F.expr(_step).alias("hops"))
@@ -645,7 +627,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
                     [F.col("repo") == F.col("mg_repo"),
                      F.col("t_display") == F.col("mg_display"),
                      F.col("lookup") == F.col("mg_lookup")],
-                    "left", bc, salt, id_salt)
+                    "left", bc)
     aj = aj.select("*", F.expr(_member_appl_sql("mg_entries", "0"))
                    .alias("_appl"))
     aj = _ck(aj.select("*", F.expr("get(array_sort(_appl), 0)").alias("_best"))
@@ -669,7 +651,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
                     F.explode(F.array_distinct(
                         F.array("m_recv", "m_name"))).alias("_ctok"))
         .withColumn("_ctok", _valid("_ctok")),
-        F.col("_ctok"), "t", lsalt=id_salt).filter(
+        F.col("_ctok"), "t").filter(
             F.col("t_display").isNotNull())
     conv_cand = conv.select(
         "repo", "mid", "m_from_key", "m_rel", "m_nargs", "m_args",
@@ -701,7 +683,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
                           [F.col("repo") == F.col("mm_repo"),
                            F.col("m_recv") == F.col("type_display"),
                            F.col("m_name") == F.col("lookup_name")],
-                          "left_anti", bc, salt, id_salt)
+                          "left_anti", bc)
                .select("repo", "mid", "m_from_key", "m_rel", "m_nargs",
                        "m_args",
                        F.posexplode(F.expr(f"split(m_head, '{US}')"))
@@ -715,7 +697,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
                             bases,
                             [F.col("repo") == F.col("b_repo"),
                              F.col("m_recv") == F.col("derived_display")],
-                            "inner", bc, salt, id_salt)
+                            "inner", bc)
                  .select("repo", "mid", "m_from_key", "m_rel", "m_nargs",
                          "m_args",
                          F.col("base_display").alias("t_display"),
@@ -729,8 +711,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
                     [F.col("repo") == F.col("mg_repo"),
                      F.col("t_display") == F.col("mg_display"),
                      F.col("lookup") == F.col("mg_lookup")],
-                    "inner", bc, salt,
-                    F.xxhash64("repo", "m_from_key", "lookup"))
+                    "inner", bc)
     bj = bj.select("*", F.expr(_member_appl_sql("mg_entries", "lrank"))
                    .alias("_appl"))
     bj = (bj.select("*", F.expr("get(array_sort(_appl), 0)").alias("_best"))
@@ -786,7 +767,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
                     [F.col("repo") == F.col("eg_repo"),
                      F.col("m_name") == F.col("eg_name"),
                      F.col("t_simple") == F.col("eg_recv")],
-                    "inner", bc, salt, id_salt)
+                    "inner", bc)
     _eappl = ("filter(transform(eg_entries, e -> named_struct("
               "'_er', CASE WHEN norm_args IS NOT NULL"
               " AND NOT contains(norm_args, '?')"
@@ -815,7 +796,7 @@ def resolve_mentions(records: DataFrame, symbols: DataFrame,
     ext_using = (
         _dict_join(um, nss,
                    [um.repo == nss.n_repo, um.m_name == nss.ns],
-                   "left_anti", bc, salt, id_salt)
+                   "left_anti", bc)
         .select("repo", F.col("m_from_key").alias("src_key"),
                 F.col("m_rel").alias("rel_type"),
                 F.concat(F.col("repo"), F.lit(":"), F.col("m_name")).alias("dst_key"))

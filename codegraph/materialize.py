@@ -178,7 +178,7 @@ def run_checkpointed(spark: SparkSession, run_dir: str, source: DataFrame,
                      assembly_refs: DataFrame | None = None,
                      pkg_metadata: DataFrame | None = None,
                      min_accessibility: str = "Private",
-                     diff: DataFrame | None = None, salt: int = 0,
+                     diff: DataFrame | None = None,
                      ingest_commits: bool = True) -> dict:
     """Checkpoint-resumable ``pipeline.run_pipeline``: the same stages, with
     extraction, linking and the node/edge/files tables each landing as a
@@ -198,7 +198,7 @@ def run_checkpointed(spark: SparkSession, run_dir: str, source: DataFrame,
     records = stage("extract", lambda: P.extract(
         files_src, plan, P.collect_pkg_meta(pkg_metadata), min_accessibility))
     symbols = canon.dedup_symbols(records.filter("rec = 'symbol'"))
-    linked = stage("linked", lambda: P.link(records, symbols, plan, salt))
+    linked = stage("linked", lambda: P.link(records, symbols, plan))
 
     @functools.cache
     def assembled():

@@ -123,18 +123,16 @@ def _parse_bytes(v: str) -> int:
 
 
 # listed-source-input threshold below which adaptive execution is disabled
-# for the run (see plan_inputs); override with CODEGRAPH_AQE_MIN_BYTES
-# (0 leaves AQE untouched everywhere)
-AQE_MIN_BYTES = int(os.environ.get("CODEGRAPH_AQE_MIN_BYTES",
-                                   str(8 * 1024 ** 3)))
+# for the run (see plan_inputs)
+AQE_MIN_BYTES = 8 * 1024 ** 3
 
 
 @dataclass(frozen=True)
 class InputPlan:
     """What one listing of the source input decided for a run. ``bytes`` is
-    None when the input was not sized (in-memory, >256 files, or the gate
-    is off); ``splits`` estimates the scan splits; ``aqe`` is the planner
-    left in force and ``dict_broadcast`` the dictionary-join strategy."""
+    None when the input was not sized (in-memory or >256 files); ``splits``
+    estimates the scan splits; ``aqe`` is the planner left in force and
+    ``dict_broadcast`` the dictionary-join strategy."""
     bytes: int | None
     files: int
     splits: int
@@ -193,8 +191,6 @@ def plan_inputs(spark, source: DataFrame) -> InputPlan:
         mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes",
                                           "128MB"))
         splits = sum(max(1, -(-s // mpb)) for s in sizes)
-    if AQE_MIN_BYTES <= 0:
-        return InputPlan(None, n, splits, aqe, True)
     if sizes is None or n > 256:
         # in-memory or many-file input: real scale or unknown size — keep
         # AQE as it is and take the shuffle-hash dictionary path
@@ -335,15 +331,15 @@ def extract(files_src: DataFrame, plan: InputPlan | None,
                            pkg_meta or {}, ts_configs=ts_configs)
 
 
-def link(records: DataFrame, symbols: DataFrame, plan: InputPlan | None,
-         salt: int = 0) -> DataFrame:
+def link(records: DataFrame, symbols: DataFrame,
+         plan: InputPlan | None) -> DataFrame:
     """Stage 2: entity linking (J1/F9) — mention resolution, then the
     dangling-edge drop over resolved and extracted relationship edges. The
     plan picks the dictionary-join strategy (broadcast without one)."""
     bc = plan is None or plan.dict_broadcast
     rels = records.filter(F.col("rec") == "rel").select(
         "repo", "src_key", "dst_key", "rel_type")
-    resolved = L.resolve_mentions(records, symbols, salt=salt, broadcast=bc)
+    resolved = L.resolve_mentions(records, symbols, broadcast=bc)
     return L.link_edges(rels.unionByName(
         resolved.select("repo", "src_key", "dst_key", "rel_type")),
         symbols, broadcast=bc)
@@ -598,7 +594,6 @@ def run_pipeline(
     pkg_metadata: DataFrame | None = None,
     min_accessibility: str = "Private",
     diff: DataFrame | None = None,
-    salt: int = 0,
     ingest_commits: bool = True,
     persist: bool = True,
     records: DataFrame | None = None,
@@ -632,7 +627,7 @@ def run_pipeline(
         # symbols feed the dictionary builds, the J1 semi-joins, DECLARES,
         # tags, and the node assembly — pay the window dedup once
         symbols = symbols.persist()
-    linked = link(records, symbols, plan, salt)
+    linked = link(records, symbols, plan)
     out = assemble(spark, files_src, records, symbols, linked, commit_log,
                    assembly_refs, pkg_metadata if overcap else None,
                    ingest_commits, persist)

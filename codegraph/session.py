@@ -44,14 +44,14 @@ def get_spark(
         # ~2x cold penalty on this host). 2048 kept: never slower in any
         # paired window, and smaller batches bound per-worker peak memory
         # when source rows carry multi-KB contents
-        # (tools/scale_exp.py + /tmp paired runs, BENCH/BASELINE.md)
+        # (BENCH/BASELINE.md, "Config experiments")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # shuffle codec stays the lz4 default: a round-4 PAIRED A/B/A/B at
         # the 15.9M-triple scale corpus (local[8], per-session sf0.001
         # warmup) measured lz4 best-of-2 179.9 s vs zstd 181.5 s — the
         # round-3 unpaired "zstd win" (738 s vs 840 s) was the same
         # first-leg-cold ordering artifact as the arrow-batch sweep
-        # (tools/scale_exp.py --paired-zstd, BENCH/BASELINE.md)
+        # (BENCH/BASELINE.md, "zstd shuffle-compression")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("CODEGRAPH_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")

@@ -33,14 +33,30 @@ def tiny_source(spark):
 
 
 @pytest.fixture(scope="session")
-def tiny_result(spark, tiny_source):
-    from codegraph import gen, pipeline
+def tiny_file_source(spark, tiny_source, tmp_path_factory):
+    """``tiny_source`` as a parquet copy: a sized input under the gate, so a
+    run over it takes the broadcast dictionary joins (the in-memory frame
+    cannot be sized and takes shuffle_hash)."""
+    path = str(tmp_path_factory.mktemp("tiny_source") / "source.parquet")
+    tiny_source.write.parquet(path)
+    return spark.read.parquet(path)
 
-    cl = gen.commit_log_table(spark, 2, 20)
-    ar = spark.createDataFrame(gen.gen_assembly_refs_pdf(2))
-    pm = spark.createDataFrame(gen.gen_pkg_metadata_pdf())
-    res = pipeline.run_pipeline(spark, tiny_source, commit_log=cl,
-                                assembly_refs=ar, pkg_metadata=pm)
+
+@pytest.fixture(scope="session")
+def tiny_aux(spark):
+    """The commit log, assembly refs and package metadata of ``tiny_result``."""
+    from codegraph import gen
+
+    return {"commit_log": gen.commit_log_table(spark, 2, 20),
+            "assembly_refs": spark.createDataFrame(gen.gen_assembly_refs_pdf(2)),
+            "pkg_metadata": spark.createDataFrame(gen.gen_pkg_metadata_pdf())}
+
+
+@pytest.fixture(scope="session")
+def tiny_result(spark, tiny_source, tiny_aux):
+    from codegraph import pipeline
+
+    res = pipeline.run_pipeline(spark, tiny_source, **tiny_aux)
     res["nodes"] = res["nodes"].cache()
     res["edges"] = res["edges"].cache()
     return res

@@ -60,24 +60,35 @@ def _sorted_rows(df):
     return sorted(map(repr, df.select(*sorted(df.columns)).collect()))
 
 
-@pytest.mark.parametrize("with_diff", [False, True])
-def test_checkpointed_run_matches_run_pipeline(spark, tiny_source, tmp_path,
-                                               with_diff):
+# ids name the diff flag; "file-" marks the file-backed source
+@pytest.mark.parametrize("file_backed, with_diff", [
+    pytest.param(False, False, id="False"),
+    pytest.param(False, True, id="True"),
+    pytest.param(True, False, id="file-False"),
+    pytest.param(True, True, id="file-True"),
+])
+def test_checkpointed_run_matches_run_pipeline(spark, tiny_source,
+                                               tiny_file_source, tmp_path,
+                                               file_backed, with_diff):
     """The checkpointed runner is run_pipeline with checkpoints: the same
-    nodes, edges and files, with or without an incremental diff."""
+    nodes, edges and files, with or without an incremental diff, on both
+    dictionary-join strategies (in-memory source: shuffle_hash; file-backed:
+    broadcast)."""
     from codegraph.materialize import run_checkpointed
     from codegraph.pipeline import discover, run_pipeline
 
+    source = tiny_file_source if file_backed else tiny_source
     diff = None
     if with_diff:
-        paths = sorted(r["path"] for r in discover(tiny_source)
+        paths = sorted(r["path"] for r in discover(source)
                        .filter("repo = 'repo0000' AND path LIKE '%.cs'")
                        .select("path").collect())[:3]
         assert len(paths) == 3
         diff = spark.createDataFrame([("repo0000", p, "M") for p in paths],
                                      "repo string, path string, status string")
-    want = run_pipeline(spark, tiny_source, diff=diff)
-    got = run_checkpointed(spark, str(tmp_path / "run_diff"), tiny_source,
+    want = run_pipeline(spark, source, diff=diff)
+    assert want["plan"].dict_broadcast == file_backed
+    got = run_checkpointed(spark, str(tmp_path / "run_diff"), source,
                            diff=diff)
     for table in ("nodes", "edges", "files"):
         assert _sorted_rows(got[table]) == _sorted_rows(want[table]), table

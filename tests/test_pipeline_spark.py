@@ -232,3 +232,46 @@ def test_ts_prefix_join_picks_nearest_ancestor(spark):
     assert got["rootfile.ts"] == ("r", "")
     # the broadcast-dict scan applies the same fallback
     assert dispatch.scan_ts_projects(src)[("r", "lib")] == "lib"
+
+
+def _graph_rows(res):
+    return {t: sorted(map(repr, res[t].select(*sorted(res[t].columns))
+                          .collect()))
+            for t in ("nodes", "edges")}
+
+
+def test_every_join_strategy_builds_the_same_graph(spark, tiny_source,
+                                                   tiny_file_source, tiny_aux,
+                                                   tiny_result):
+    """The dictionary joins build the same nodes and edges on every path a
+    run can take: broadcast (a file-backed input under the gate),
+    shuffle_hash (the in-memory ``tiny_result``), and shuffle_hash under AQE
+    with skew thresholds low enough to split partitions of this tiny input
+    (a split targets at least the advisory partition size, so that is
+    lowered too)."""
+    from codegraph import pipeline as P
+
+    want = _graph_rows(tiny_result)
+    assert not tiny_result["plan"].dict_broadcast
+
+    bc = P.run_pipeline(spark, tiny_file_source, **tiny_aux)
+    assert bc["plan"].dict_broadcast
+    assert _graph_rows(bc) == want
+
+    skew = {"spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}
+    prior = {k: spark.conf.get(k, None) for k in skew}
+    try:
+        for k, v in skew.items():
+            spark.conf.set(k, v)
+        aqe = P.run_pipeline(spark, tiny_source, **tiny_aux)
+        assert aqe["plan"].aqe and not aqe["plan"].dict_broadcast
+        assert _graph_rows(aqe) == want
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
